@@ -1,7 +1,7 @@
 """Shared column-expression helpers used across query modules.
 
-Everything here returns Catalyst ``Column`` expressions (JVM-side,
-codegen-friendly). Nothing crosses into Python at runtime.
+Everything here returns Catalyst ``Column`` expressions (or their
+SQL text) evaluated JVM-side. Nothing crosses into Python at runtime.
 """
 
 from __future__ import annotations
@@ -55,13 +55,25 @@ def charge() -> Column:
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two float arrays, accumulated in double.
 
-    Built from higher-order functions (``zip_with`` + ``aggregate``)
-    so it stays inside codegen — no UDF, no Arrow crossing. The cast
-    to double before multiply matters: float32 accumulation drifts
-    past the 6-decimal rounding window at dim=64.
+    Built from higher-order functions (``zip_with`` + ``aggregate``):
+    no UDF, no Arrow crossing, but NOT whole-stage codegen —
+    ``ZipWith`` and ``ArrayAggregate`` are ``CodegenFallback``
+    expressions in Spark 4.1, evaluated by the interpreter per row.
+    The cast to double before multiply matters: float32 accumulation
+    drifts past the 6-decimal rounding window at dim=64.
     """
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of :func:`dot` — the same left fold from ``0.0``, the
+    same casts — for plans built as one ``F.expr`` string instead of
+    a Py4J call per Column node."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (_x, _y) -> "
+        "CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE)), 0.0D, (_acc, _v) -> _acc + _v)"
     )

@@ -515,10 +515,11 @@ def j14_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerates to a cross product; the first discipline is to BLOCK
     on a time bucket that bounds the overlap scope (the day) — J8's
     equi+residual shape lifted to intervals. But the block key here
-    is DAY alone: every user shares the same ~30 day blocks, so the
-    blocked join still evaluates (users/day)^2 residual pairs per
-    block at ANY corpus size — quadratic inside the block even
-    though the output is one count per day.
+    is DAY alone: every user shares the same 30 day blocks (every
+    fixture spans 2024-01-01..30), so the blocked join still
+    evaluates (users/day)^2 residual pairs per block at ANY corpus
+    size — quadratic inside the block even though the output is one
+    count per day.
 
     r16 rewrite (guide §3 — avoid the join that multiplies rows —
     and §2.4, remove its shuffle outright): the count
@@ -575,10 +576,13 @@ def j14_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.coalesce(F.sum("is_end").over(w), F.lit(0))
         ).alias("active_before"),
     )
+    # A day whose intervals are pairwise disjoint (e.g. one active
+    # user) sums to 0; the join spelling emits no row for it.
     return (
         contrib.filter(F.col("is_end") == 0)
         .groupBy("day")
         .agg(F.sum("active_before").alias("n_overlapping_pairs"))
+        .where(F.col("n_overlapping_pairs") > 0)
     )
 
 

@@ -157,10 +157,37 @@ def l01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # L2 (exact metric) — n-gram Jaccard similarity, oracle-checked
 # --------------------------------------------------------------------------
 
+#: 3-token shingle set over the ``_toks`` column (``text`` split on
+#: single spaces) — build it with `shingles`, which splits once per
+#: doc. Spelled with ``split(text, ' ')`` inline, the split sat inside
+#: the per-index lambda and re-ran for every shingle: O(tokens²)
+#: interpreted work per doc (``ArrayTransform`` is a
+#: ``CodegenFallback``, so no subexpression is shared).
 _SHINGLE_SPARK = (
-    "array_distinct(transform(sequence(1, greatest(size(split(text, ' ')) - 2, 1)), "
-    "i -> concat_ws(' ', slice(split(text, ' '), i, 3))))"
+    "array_distinct(transform(sequence(1, greatest(size(_toks) - 2, 1)), "
+    "i -> concat_ws(' ', slice(_toks, i, 3))))"
 )
+
+
+def shingles(df: DataFrame, *keep: str) -> DataFrame:
+    """``(*keep, sh)``: each row's shingle set (`_SHINGLE_SPARK`),
+    with ``text`` split ONCE into the ``_toks`` column the shingle
+    lambda reads. The optimizer keeps the split in its own
+    projection because the shingle expression reads ``_toks`` twice
+    (CollapseProject does not duplicate a non-trivial expression)."""
+    return df.withColumn("_toks", F.split(F.col("text"), " ")).select(
+        *keep, F.expr(_SHINGLE_SPARK).alias("sh")
+    )
+
+
+def hashed_shingles(df: DataFrame) -> DataFrame:
+    """``(doc_id, hv)``: each doc's shingle set hashed with the
+    portable family at label 99 (outside the 0..31 permutation
+    family) — the verification payload of the MinHash joins, which
+    ships 8-byte longs instead of shingle strings."""
+    return shingles(df, "doc_id").selectExpr(
+        "doc_id", f"array_distinct(transform(sh, _s -> {_mh_hash_sql(99, '_s')})) AS hv"
+    )
 
 L2_JACCARD_ORACLE = """
 WITH s AS (
@@ -191,16 +218,19 @@ LIMIT 20
 def l02_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 exact metric — 3-token shingle Jaccard, top-20 pairs on a
     bounded doc range. Shingling is a higher-order `transform` over
-    `sequence` (codegen, no UDF). Docs under 3 tokens are excluded
+    `sequence` (interpreted, no UDF). Docs under 3 tokens are excluded
     on BOTH sides: the engines degenerate differently there (DuckDB's
     out-of-range list index nulls the concat and list_distinct drops
     it; Spark's slice keeps the partial shingle), and a <3-token doc
     has no 3-gram shingle set to speak of anyway. This exact metric
     is what the MinHash estimate below converges to."""
     (documents,) = load_tables(spark, sf_dir, "documents")
-    s = documents.filter(
-        (F.col("doc_id") < 60) & (F.size(F.split(F.col("text"), " ")) >= 3)
-    ).select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
+    s = shingles(
+        documents.filter(
+            (F.col("doc_id") < 60) & (F.size(F.split(F.col("text"), " ")) >= 3)
+        ),
+        "doc_id",
+    )
     a = s.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
     b = s.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
     inter = F.size(F.array_intersect(F.col("a_sh"), F.col("b_sh")))
@@ -247,62 +277,49 @@ def _mh_hash_duck(j: int, x: str = "x") -> str:
     return f"CAST('0x' || substr(md5('{j}:' || {x}), 1, 15) AS BIGINT)"
 
 
-def _mh_hash_spark(j: int, s):
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{j}:"), s)), 1, 15), 16, 10
-    ).cast("long")
+def _mh_hash_sql(j: int, x: str) -> str:
+    """Spark SQL text of h_j(x), the twin of `_mh_hash_duck`. Plans
+    embed it in larger SQL strings, built with one Py4J call each
+    instead of one per Column node."""
+    return f"CAST(conv(substring(md5(concat('{j}:', {x})), 1, 15), 16, 10) AS BIGINT)"
+
+
+#: The 32-hash MinHash signature as select-list SQL (``mh0`` ..
+#: ``mh31`` over an ``sh`` shingle column). Each hash index is baked
+#: into its string, so no Python closure can bind it wrongly (the
+#: round-5 default-argument lambda bug, where ``j`` bound the element
+#: index and the family silently changed).
+_MH_SIG_SQL = [
+    f"array_min(transform(sh, _s -> {_mh_hash_sql(j, '_s')})) AS mh{j}"
+    for j in range(N_HASHES)
+]
 
 
 def _banded_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, sh) → exploded (doc_id, band_id, bucket) band keys.
 
-    Shared by l02 (global near-dup) and l59 (incremental probe).
-    Bind j via a closure FACTORY, never ``lambda s, j=j:`` — PySpark
-    decides the lambda's shape from its Python ARITY, so a default
-    argument turns the function into the (element, index) variant:
-    j silently binds to the index Column and f"{j}:" stringifies it
-    into a "Column<'y_N'>:" prefix. That still yields 32 distinct
-    hash families (which is why small-SF candidate counts agreed
-    with the oracle by coincidence), but NOT the declared portable
-    family — caught by the round-5 full-registry sweep at sf0.1,
-    where the random-collision tail finally diverged (258 vs 256
-    candidates).
+    Shared by l02 (global near-dup), l59 (incremental probe), l70,
+    l79 and l81. Signature and band structs are each built as SQL text
+    (`_MH_SIG_SQL`, one explode string): the Column spelling cost
+    one Py4J round-trip per expression node.
 
     The banding explode carries ONLY (band key, doc_id) — shingle
     sets re-join onto deduplicated candidate pairs for
     verification, so at corpus scale the band shuffle moves ids,
     never shingle arrays."""
-
-    def _h_j(j: int):
-        return lambda s: _mh_hash_spark(j, s)
-
-    minhashes = docs.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("sh"), _h_j(j))).alias(f"mh{j}")
-            for j in range(N_HASHES)
-        ],
+    bands = ", ".join(
+        f"named_struct('band_id', {b}, 'bucket', concat_ws(',', "
+        + ", ".join(
+            f"CAST(mh{b * ROWS_PER_BAND + r} AS STRING)" for r in range(ROWS_PER_BAND)
+        )
+        + "))"
+        for b in range(N_BANDS)
     )
-    return minhashes.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"mh{b * ROWS_PER_BAND + r}").cast("string")
-                                for r in range(ROWS_PER_BAND)
-                            ],
-                        ).alias("bucket"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.bucket")
+    return (
+        docs.selectExpr("doc_id", *_MH_SIG_SQL)
+        .select("doc_id", F.expr(f"explode(array({bands}))").alias("band"))
+        .select("doc_id", "band.band_id", "band.bucket")
+    )
 
 
 def _mh_sig_ctes(src: str = "documents") -> str:
@@ -413,8 +430,7 @@ def l02_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     (documents,) = load_tables(spark, sf_dir, "documents")
     documents = spread(documents)  # CPU-bound hash family: see catalog.spread
-    docs = documents.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
-    banded = _banded_signatures(docs)
+    banded = _banded_signatures(shingles(documents, "doc_id"))
 
     # Verification must never join the CORPUS-sized shingle relation
     # directly: its in-memory size is ~50x the parquet estimate (the
@@ -428,28 +444,28 @@ def l02_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here), then recompute shingles for that sliver; every
     # shingle-bearing join input is now candidate-sized.
     #
-    # The pair list itself is materialized ONCE per execution with an
-    # eager localCheckpoint (the CC-loop precedent below): every
-    # extra consumer of `candidates` re-instantiates the whole
-    # signature subtree (32 md5-derived hashes per shingle — THE
-    # dominant cost; exchange reuse does not dedup it, measured 10
-    # FileScans in the un-checkpointed plan), and (a_id, b_id) pairs
-    # are the smallest relation in the query. The candidate count
-    # needs no separate agg leg either — the verification join is
-    # inner on ids that exist by construction, so its row count IS
-    # the candidate count; both tallies fall out of one aggregate.
-    candidates = band_candidates(
-        banded, id_col="doc_id", key="bucket"
-    ).localCheckpoint(eager=True)
+    # `candidates` has two consumers (the member ids below and the
+    # verification join), yet the signature subtree — 32 md5-derived
+    # hashes per shingle, THE dominant cost — runs once per
+    # execution: `band_candidates` puts one exchange under both band
+    # join sides, so the candidate subtree is one canonical plan and
+    # every repeat of it (its dedup shuffle included) is a
+    # ReusedExchange (pinned by test_dedup_kernels_run_once). That
+    # replaced an eager localCheckpoint, which ran the signature
+    # stages inside plan building and left one persisted RDD behind
+    # per call, never released. The candidate count needs no separate
+    # agg leg either — the verification join is inner on ids that
+    # exist by construction, so its row count IS the candidate
+    # count; both tallies fall out of one aggregate.
+    candidates = band_candidates(banded, id_col="doc_id", key="bucket")
     cand_ids = (
         candidates.select(
             F.explode(F.array(F.col("a_id"), F.col("b_id"))).alias("doc_id")
         )
         .distinct()
     )
-    # The verification payload is the HASHED shingle set (house
-    # portable 60-bit md5 hash, label 99 — outside the 0..31
-    # permutation family), not the shingle strings: the hashed-Jaccard
+    # The verification payload is the HASHED shingle set
+    # (`hashed_shingles`), not the shingle strings: the hashed-Jaccard
     # compare is set arithmetic either way, and 8-byte longs keep the
     # candidate-side shuffle at "hashes and ids" — the posture the
     # rest of this operator already holds. The oracle replays the
@@ -478,14 +494,7 @@ def l02_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label-99 hash family runs over ALL docs instead of candidate
     # members — one extra pass next to the 32 the signatures already
     # pay (~3%), and it runs map-side in the scan projection.
-    docs_cand = documents.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.expr(_SHINGLE_SPARK), lambda s: _mh_hash_spark(99, s)
-            )
-        ).alias("hv"),
-    ).join(cand_ids, "doc_id", "left_semi")
+    docs_cand = hashed_shingles(documents).join(cand_ids, "doc_id", "left_semi")
     sh_a = docs_cand.select(F.col("doc_id").alias("a_id"), F.col("hv").alias("a_hv"))
     sh_b = docs_cand.select(F.col("doc_id").alias("b_id"), F.col("hv").alias("b_hv"))
     inter = F.size(F.array_intersect(F.col("a_hv"), F.col("b_hv")))
@@ -596,19 +605,20 @@ def l02_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     single long; near-dup pairs must share one of 4 15-bit bands
     (pigeonhole: any pair within hamming 8 shares a band when
     distance spreads over 4 bands... a standard blocking
-    heuristic), then verify with `bit_count(a XOR b) <= 8`.
+    heuristic), then verify with `bit_count(a XOR b) <= 8`. Both
+    counts come from ONE aggregate over the candidate pairs: two
+    crossJoined counts each re-ran the pair subtree, fingerprints
+    included.
     """
     (documents,) = load_tables(spark, sf_dir, "documents")
     documents = spread(documents)  # CPU-bound hash family: see catalog.spread
-    fps, pairs = _simhash_fps_and_pairs(documents)
-    near = pairs.filter(
-        F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig"))) <= MAX_HAMMING
-    )
-    return (
-        pairs.agg(F.count(F.lit(1)).alias("n_candidates"))
-        .crossJoin(near.agg(F.count(F.lit(1)).alias("n_near")))
-        .select(F.lit("simhash").alias("strategy"), "n_candidates", "n_near")
-    )
+    _, pairs = _simhash_fps_and_pairs(documents)
+    return pairs.agg(
+        F.count(F.lit(1)).alias("n_candidates"),
+        F.count_if(
+            F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig"))) <= MAX_HAMMING
+        ).alias("n_near"),
+    ).select(F.lit("simhash").alias("strategy"), "n_candidates", "n_near")
 
 
 #: Hard fence for l71's exact O(N²) popcount leg. 100k fingerprints
@@ -621,51 +631,41 @@ L71_AUDIT_MAX_DOCS = 100_000
 def _simhash_fps_and_pairs(documents: DataFrame):
     """(fps, candidate-pairs) for the 60-bit SimHash banding — the
     Spark twin of `_simhash_cand_ctes`, shared by l02 and the l71
-    recall curve so the blocking semantics cannot diverge."""
-    toks = documents.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok")
-    ).select("doc_id", _mh_hash_spark(0, F.col("tok")).alias("h"))
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(SIMHASH_BITS)
-        ]
+    recall curve so the blocking semantics cannot diverge.
+
+    The fingerprint is ONE aggregate expression built as SQL text:
+    60 vote sums, each bit set iff its sum is positive, packed by
+    addition. The Column spelling of the same tree cost one Py4J
+    round-trip per expression node. As in `band_candidates`, the band
+    self-join's two sides share one exchange below their aliases,
+    so the fingerprint subtree runs once."""
+    toks = documents.selectExpr(
+        "doc_id", "explode(array_distinct(split(text, ' '))) AS tok"
+    ).selectExpr("doc_id", f"{_mh_hash_sql(0, 'tok')} AS h")
+    sig = " + ".join(
+        f"CASE WHEN sum(CASE WHEN (shiftrightunsigned(h, {i}) & 1) = 1 "
+        f"THEN 1 ELSE -1 END) > 0 THEN {1 << i}L ELSE 0L END"
+        for i in range(SIMHASH_BITS)
     )
-    sig = F.lit(0).cast("long")
-    for i in range(SIMHASH_BITS):
-        sig = sig + F.when(
-            F.col(f"v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-    fps = votes.select("doc_id", sig.alias("simhash"))
+    fps = toks.groupBy("doc_id").agg(F.expr(sig).alias("simhash"))
 
-    banded = fps.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftrightunsigned(
-                            F.col("simhash"), b * BITS_PER_SIMHASH_BAND
-                        )
-                        .bitwiseAND(F.lit((1 << BITS_PER_SIMHASH_BAND) - 1))
-                        .alias("band_val"),
-                    )
-                    for b in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-
-    a = banded.select(
+    mask = (1 << BITS_PER_SIMHASH_BAND) - 1
+    bands = ", ".join(
+        f"named_struct('band_id', {b}, 'band_val', "
+        f"shiftrightunsigned(simhash, {b * BITS_PER_SIMHASH_BAND}) & {mask})"
+        for b in range(SIMHASH_BANDS)
+    )
+    keyed = (
+        fps.select(
+            "doc_id", "simhash", F.expr(f"explode(array({bands}))").alias("band")
+        )
+        .select("band.band_id", "band.band_val", "doc_id", "simhash")
+        .repartition("band_id", "band_val")
+    )
+    a = keyed.select(
         "band_id", "band_val", F.col("doc_id").alias("a_id"), F.col("simhash").alias("a_sig")
     )
-    b = banded.select(
+    b = keyed.select(
         "band_id", "band_val", F.col("doc_id").alias("b_id"), F.col("simhash").alias("b_sig")
     )
     pairs = (
@@ -1263,7 +1263,7 @@ def l26_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents.filter(
         (F.col("doc_id") < 60) & (F.size(F.split(F.col("text"), " ")) >= 3)
     )
-    s = docs.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
+    s = shingles(docs, "doc_id")
     a = s.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
     b = s.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
     inter = F.size(F.array_intersect(F.col("a_sh"), F.col("b_sh")))
@@ -1602,8 +1602,7 @@ def l59_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the batch side moves. Never N², never a corpus re-scan."""
     (documents,) = load_tables(spark, sf_dir, "documents")
     documents = spread(documents)  # CPU-bound hash family: see catalog.spread
-    docs = documents.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
-    banded = _banded_signatures(docs)
+    banded = _banded_signatures(shingles(documents, "doc_id"))
 
     probe = banded.filter(F.col("doc_id") % 10 == 0).select(
         "band_id", "bucket", F.col("doc_id").alias("batch_id")
@@ -1636,14 +1635,7 @@ def l59_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hv BEFORE the semi-join (the r14 order fix, see l02): the
     # static SMJ spelling of the semi-join must exchange (doc_id,
     # hv), never (doc_id, text).
-    docs_cand = documents.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.expr(_SHINGLE_SPARK), lambda s: _mh_hash_spark(99, s)
-            )
-        ).alias("hv"),
-    ).join(cand_ids, "doc_id", "left_semi")
+    docs_cand = hashed_shingles(documents).join(cand_ids, "doc_id", "left_semi")
     sh_a = docs_cand.select(F.col("doc_id").alias("batch_id"), F.col("hv").alias("a_hv"))
     sh_b = docs_cand.select(F.col("doc_id").alias("index_id"), F.col("hv").alias("b_hv"))
     inter = F.size(F.array_intersect(F.col("a_hv"), F.col("b_hv")))
@@ -1747,9 +1739,7 @@ def _l81_maintained(
     arrivals = documents.filter(F.col("doc_id") % 7 == 2).select(
         (-F.col("doc_id")).alias("doc_id"), "text"
     )
-    add_keys = _banded_signatures(
-        arrivals.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
-    )
+    add_keys = _banded_signatures(shingles(arrivals, "doc_id"))
     stored = spark.read.parquet(os.path.join(store, "gen1"))
     return stored.join(takedowns, "doc_id", "left_anti").unionByName(add_keys)
 
@@ -1797,9 +1787,7 @@ def l81_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = os.path.join(SCRATCH, f"l81_index_{tag}")
 
     # ---- build + persist gen1 (one-time backfill) ----
-    idx_docs = documents.filter(F.col("doc_id") % 10 != 0).select(
-        "doc_id", F.expr(_SHINGLE_SPARK).alias("sh")
-    )
+    idx_docs = shingles(documents.filter(F.col("doc_id") % 10 != 0), "doc_id")
     _banded_signatures(idx_docs).write.mode("overwrite").parquet(
         os.path.join(store, "gen1")
     )
@@ -1809,9 +1797,8 @@ def l81_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained.write.mode("overwrite").parquet(os.path.join(store, "gen2"))
 
     # ---- summary read from the persisted maintained index ----
-    row_hash = _mh_hash_spark(
-        777,
-        F.concat(F.col("bucket"), F.lit("|"), F.col("doc_id").cast("string")),
+    row_hash = F.expr(
+        _mh_hash_sql(777, "concat(bucket, '|', CAST(doc_id AS STRING))")
     )
     return (
         spark.read.parquet(os.path.join(store, "gen2"))
@@ -2204,7 +2191,7 @@ def l70_minhash_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_L70_VARIANT_SQL).alias("text"),
     )
     docs_all = documents.select("doc_id", "text").unionByName(variants)
-    docs = docs_all.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
+    docs = shingles(docs_all, "doc_id")
 
     posts = docs.select("doc_id", F.explode("sh").alias("g"))
     pa = posts.select("g", F.col("doc_id").alias("a_id"))
@@ -2347,7 +2334,7 @@ def l72_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard middle range, and needs no O(N²) leg — 64 known pairs, an
     equi-join on doc_id+offset. The exact-J side runs set ops on 64
     pairs' shingle arrays (bounded, never corpus-scale); the
-    signature side reuses `_mh_hash_spark`/`_mh_sig_ctes`, ONE
+    signature side reuses `_MH_SIG_SQL`/`_mh_sig_ctes`, ONE
     spelling of the hash family across operator, recall audit, and
     this accuracy audit.
 
@@ -2362,19 +2349,7 @@ def l72_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_L70_VARIANT_SQL).alias("text"),
     )
     docs_all = documents.select("doc_id", "text").unionByName(variants)
-    shingled = docs_all.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
-
-    def _h_j(j: int):
-        return lambda s: _mh_hash_spark(j, s)
-
-    sigs = shingled.select(
-        "doc_id",
-        "sh",
-        *[
-            F.array_min(F.transform(F.col("sh"), _h_j(j))).alias(f"mh{j}")
-            for j in range(N_HASHES)
-        ],
-    )
+    sigs = shingles(docs_all, "doc_id").selectExpr("doc_id", "sh", *_MH_SIG_SQL)
     a = sigs.filter(F.col("doc_id") < L70_N_PLANT).select(
         "doc_id",
         F.col("sh").alias("a_sh"),
@@ -2831,7 +2806,7 @@ def l79_prep_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # near-dup over the GATED set (subsumes exact dedup — docstring):
     # banding, candidate pairs, hashed-set verification, greedy drop
-    s = gated.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
+    s = shingles(gated, "doc_id")
     banded = _banded_signatures(s)
     cand = (
         banded.alias("a")
@@ -2856,14 +2831,7 @@ def l79_prep_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hv BEFORE the semi-join (see the l02 r14 order fix): the static
     # SMJ spelling of this semi-join exchanges (doc_id, hv), never
     # (doc_id, text).
-    docs_cand = gated.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.expr(_SHINGLE_SPARK), lambda x: _mh_hash_spark(99, x)
-            )
-        ).alias("hv"),
-    ).join(cand_ids, "doc_id", "left_semi")
+    docs_cand = hashed_shingles(gated).join(cand_ids, "doc_id", "left_semi")
     sh_a = docs_cand.select(F.col("doc_id").alias("a_id"), F.col("hv").alias("a_hv"))
     sh_b = docs_cand.select(F.col("doc_id").alias("b_id"), F.col("hv").alias("b_hv"))
     inter = F.size(F.array_intersect(F.col("a_hv"), F.col("b_hv")))

@@ -5,9 +5,10 @@ Three physical strategies, in increasing scale:
 
 - **brute force** (`emb_topk_cosine`, `l03_knn_batch`): broadcast
   the tiny query side, scan all candidates once, `zip_with` +
-  `aggregate` dot product in codegen, TakeOrderedAndProject top-k.
-  O(N·d) per query batch, scan-bound, no shuffle of vectors —
-  the right baseline at any scale where a full scan is acceptable.
+  `aggregate` dot product (interpreted per row, no UDF),
+  TakeOrderedAndProject top-k. O(N·d) per query batch, scan-bound,
+  no shuffle of vectors — the right baseline at any scale where a
+  full scan is acceptable.
 - **LSH-bucketed join** (`l04_simjoin_lsh`): 16-bit random-
   hyperplane signatures (deterministic seed), banded 4×4; candidate
   pairs only within equal band values, then exact verification.
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hetnetdb_spark.catalog import load_tables, spread
-from hetnetdb_spark.expr import dot, r6
+from hetnetdb_spark.expr import dot, dot_sql, r6
 from hetnetdb_spark.registry import query
 from hetnetdb_spark.scratch import SCRATCH
 
@@ -136,8 +137,9 @@ def l03_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 — top-3 neighbors for each of 5 query vectors in ONE pass.
 
     Broadcast the query batch, score every (candidate × query) pair
-    in codegen, then per-query window top-k. One candidate scan
-    total — per-query scans would be Q× the IO. The window
+    with the interpreted `dot` fold (no UDF), then per-query window
+    top-k. One candidate scan total — per-query scans would be Q×
+    the IO. The window
     partitions on qid (|Q| groups), so the final shuffle carries
     only scored pairs, never raw vectors at N× scale.
     """
@@ -323,9 +325,18 @@ def band_candidates(
     the MinHash joins (l02/l70, key='bucket'), and the slope tool,
     so a change to candidate semantics cannot miss a caller. The
     join carries only (band keys, id) — the thin-shuffle invariant
-    the family's plan tests pin."""
-    a = banded.select("band_id", key, F.col(id_col).alias("a_id"))
-    b = banded.select("band_id", key, F.col(id_col).alias("b_id"))
+    the family's plan tests pin.
+
+    ONE exchange feeds both join sides: the hash repartition on the
+    band key sits BELOW the a_id/b_id aliases, so the two sides are
+    the same canonical plan and the second reads the first's shuffle
+    as a ReusedExchange. With the exchange above the aliases, each
+    side planned its own subtree, and the signature work below it —
+    the hashing or hyperplane dots that dominate these queries — ran
+    once per side."""
+    keyed = banded.select("band_id", key, id_col).repartition("band_id", key)
+    a = keyed.select("band_id", key, F.col(id_col).alias("a_id"))
+    b = keyed.select("band_id", key, F.col(id_col).alias("b_id"))
     return (
         a.join(b, ["band_id", key])
         .filter(F.col("a_id") < F.col("b_id"))
@@ -348,11 +359,14 @@ def _band_structs(
 ) -> list[F.Column]:
     """One (band_id, band_val) struct per band, band_val built
     directly from that band's plane signs. Per-band values avoid
-    packing 64 bits into one signed long (bit 63 would overflow) and
-    keep every expression inside codegen. Parameterized since round
-    7 so the selective 8×8 regime (`l04_simjoin_lsh_tuned`) shares
-    the same seed-42 planes and sign arithmetic as the default
-    16×4; ``n_bands * bits`` must not exceed N_PLANES."""
+    packing 64 bits into one signed long (bit 63 would overflow).
+    The r15-era spelling, kept as the reference `banded_keys` is
+    pinned frame-identical against; every `dot` in it is an
+    interpreted higher-order fold (see `expr.dot`). Parameterized
+    since round 7 so the selective 8×8 regime
+    (`l04_simjoin_lsh_tuned`) shares the same seed-42 planes and
+    sign arithmetic as the default 16×4; ``n_bands * bits`` must not
+    exceed N_PLANES."""
     if n_bands * bits > N_PLANES:
         raise ValueError(
             f"banding {n_bands}x{bits} needs {n_bands * bits} planes "
@@ -392,10 +406,19 @@ def banded_keys(
     lambda computes every plane sign in plane order — same ``dot``
     fold (identical doubles, identical signs; banded output
     frame-identical to the old spelling, pinned by
-    tests/test_plans.py::test_banded_keys_matches_band_structs), with
-    analysis at ~0.45 s. Per-band values then assemble from the signs
-    column with flat integer arithmetic; the ``_signs`` helper column
-    never leaves this function.
+    tests/test_plans.py::test_banded_keys_matches_band_structs).
+    The fold is interpreted per row, not codegen: ``ArrayTransform``,
+    ``ZipWith`` and ``ArrayAggregate`` are ``CodegenFallback``
+    expressions in Spark 4.1.
+
+    Both expressions are built as SQL text, one ``F.expr`` each:
+    built from ``F.lit`` Columns, the 4,096 plane doubles alone cost
+    4,096 Py4J round-trips per call. Each double is written as ``repr(x) + "D"`` — the
+    shortest decimal that round-trips, parsed back to the identical
+    IEEE value — and the fold is `expr.dot_sql`, `dot`'s own order.
+    Per-band values then assemble from the signs column with flat
+    integer arithmetic; the ``_signs`` helper column never leaves
+    this function.
     """
     if n_bands * bits > N_PLANES:
         raise ValueError(
@@ -403,25 +426,26 @@ def banded_keys(
             f"but only {N_PLANES} exist"
         )
     planes = _hyperplanes()
-    planes_lit = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in planes[p]])
-            for p in range(n_bands * bits)
-        ]
+    planes_sql = ", ".join(
+        "array(" + ", ".join(f"{float(x)!r}D" for x in planes[p]) + ")"
+        for p in range(n_bands * bits)
     )
-    signs = F.transform(
-        planes_lit,
-        lambda p: F.when(dot(F.col(col), p) > 0, F.lit(1)).otherwise(F.lit(0)),
+    signs = F.expr(
+        f"transform(array({planes_sql}), _p -> "
+        f"CASE WHEN {dot_sql(col, '_p')} > 0 THEN 1 ELSE 0 END)"
     )
-    structs = []
-    for b in range(n_bands):
-        val = F.lit(0)
-        for r in range(bits):
-            val = val + F.element_at("_signs", b * bits + r + 1) * F.lit(1 << r)
-        structs.append(F.struct(F.lit(b).alias("band_id"), val.alias("band_val")))
+    structs = ", ".join(
+        f"named_struct('band_id', {b}, 'band_val', 0"
+        + "".join(
+            f" + element_at(_signs, {b * bits + r + 1}) * {1 << r}"
+            for r in range(bits)
+        )
+        + ")"
+        for b in range(n_bands)
+    )
     return (
         df.withColumn("_signs", signs)
-        .select(id_col, F.explode(F.array(*structs)).alias("band"))
+        .select(id_col, F.expr(f"explode(array({structs}))").alias("band"))
         .select(id_col, "band.band_id", "band.band_val")
     )
 
@@ -529,12 +553,26 @@ def l04_simjoin_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode to (band_id, band_val) keys → self-join on the band key
     (equi-join ⇒ shuffle hash join on 16·N short rows, NOT a cross
     join) → distinct pairs → exact cosine verification. The band
-    join carries ONLY (band_id, band_val, vec_id) — embeddings are
-    re-joined onto the deduplicated candidate pairs afterwards, so
-    at corpus scale the 16× banding shuffle moves ids, not vectors.
+    join carries ONLY (band_id, band_val, vec_id), so at corpus
+    scale the 16× banding shuffle moves ids, not vectors.
     Self-measuring output: candidate count, verified count, exact
     count, and recall vs the exact join; parameters are sized for
     recall ≥ 0.9 at the 0.35 threshold (see LSH_RECALL_TARGET).
+
+    Verification is a lookup, not a second dot product: a candidate
+    verifies iff it is in ``exact_pairs(emb, SIM_THRESHOLD)``, the
+    pair set this query builds anyway for ``n_exact``. Its guard
+    band makes its 6dp-rounded membership equal the `dot` fold's
+    pair by pair, so the count is the one the fold gave. This is
+    scale-neutral: l04 reports recall against the exact join, so it
+    already pays the O(N²) exact leg at every scale, and the lookup
+    only reuses that leg's output. What it removes is an interpreted
+    64-dim fold over every candidate (about 64% of all pairs at this
+    threshold, so that leg was O(N²) too) plus the two vector
+    re-joins feeding it. Both counts come from one aggregate over the
+    looked-up candidates, so the candidate subtree runs once. A
+    production LSH join that skips the recall audit would verify
+    with `dot` instead.
 
     Honest selectivity note: at this deliberately weak threshold
     (θ ≈ 69.5°, barely off random's 90°) a 0.9-recall banding admits
@@ -546,31 +584,24 @@ def l04_simjoin_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`l03_knn_ivf`) instead.
     """
     (emb,) = load_tables(spark, sf_dir, "embeddings")
-    emb = spread(emb, key="vec_id")  # CPU-bound hyperplane dots: see catalog.spread
-    banded = banded_keys(emb)
+    # CPU-bound hyperplane dots: see catalog.spread
+    banded = banded_keys(spread(emb, key="vec_id"))
 
     candidates = band_candidates(banded, id_col="vec_id")
-    ea = emb.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb"))
-    eb = emb.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("b_emb"))
-    verified = (
-        candidates.join(ea, "a_id")
-        .join(eb, "b_id")
-        .select("a_id", "b_id", r6(dot(F.col("a_emb"), F.col("b_emb"))).alias("cosine"))
-        .filter(F.col("cosine") >= SIM_THRESHOLD)
+    hits = exact_pairs(spark, emb, SIM_THRESHOLD).select(
+        "a_id", "b_id", F.lit(1).alias("hit")
     )
-
-    n_candidates = candidates.agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("lsh").alias("strategy"), F.col("n").alias("n_candidates")
+    counts = candidates.join(hits, ["a_id", "b_id"], "left").agg(
+        F.count(F.lit(1)).alias("n_candidates"),
+        F.count("hit").alias("n_verified"),
     )
-    n_verified = verified.agg(F.count(F.lit(1)).alias("n_verified"))
     n_exact = l04_simjoin_exact(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("n_exact")
     )
     return (
-        n_candidates.crossJoin(n_verified)
-        .crossJoin(n_exact)
+        counts.crossJoin(n_exact)
         .select(
-            "strategy",
+            F.lit("lsh").alias("strategy"),
             "n_candidates",
             "n_verified",
             "n_exact",
@@ -1847,7 +1878,7 @@ def l66_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     renormalize at ingest (one map-side pass) before any of it is
     meaningful.
 
-    Scale: one scan, per-row codegen fold, 1-row output — the
+    Scale: one scan, per-row interpreted fold, 1-row output — the
     cheapest possible invariant to keep in a daily index health
     check."""
     (emb,) = load_tables(spark, sf_dir, "embeddings")
@@ -1946,10 +1977,11 @@ def l78_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row stats aggregate, contains-prefiltered scan)
     over candidates doc_id != 0; the dense leg is emb_topk's
     plan-time-bound query vector (vec_id=0's embedding inlined as an
-    array literal) dotted in codegen. Each leg selects its top-50 via
-    TakeOrderedAndProject — the only corpus-sized operators in the
-    plan — then ranks those 50 rows with a single-partition
-    row_number (constant-size by construction). The fusion itself is
+    array literal) dotted by the interpreted `dot` fold. Each leg
+    selects its top-50 via TakeOrderedAndProject — the only
+    corpus-sized operators in the plan — then ranks those 50 rows
+    with a single-partition row_number (constant-size by
+    construction). The fusion itself is
     a full outer join of two ≤50-row frames: a doc missing from one
     leg contributes 0 to its RRF term, exactly the asymmetric-recall
     case hybrid search exists for.

@@ -9,7 +9,8 @@ hash aggregate. The only shuffles are on low-cardinality keys
 size, with map-side partial aggregation), so at 100 TB these remain
 scan-bound with KB-scale shuffles. No Python crossing anywhere —
 tokenization is `split`/`regexp`, fingerprints are `md5` over
-higher-order-function shingles, all inside whole-stage codegen.
+higher-order-function shingles (JVM built-ins; the higher-order
+functions themselves are interpreted, not whole-stage codegen).
 """
 
 from __future__ import annotations

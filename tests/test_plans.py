@@ -7,6 +7,8 @@ means a silent factor lost at 100 TB even if answers stay correct.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from hetnetdb_spark import registry
@@ -224,6 +226,32 @@ def test_banded_keys_matches_band_structs(spark):
         assert old.equals(new), f"banding spellings diverge at {n_bands}x{bits}"
 
 
+def _executed_without_broadcast(spark, name: str) -> str:
+    """Build ``name`` once under normal conf (configure() re-applies
+    the session broadcast threshold at build time), THEN disable
+    broadcast joins for the execution: at sf0.001 AQE otherwise
+    broadcasts every join, leaving zero gated exchanges and vacuous
+    shuffle invariants (ADVICE r10). With broadcasts off, the band
+    join materializes as the same shuffle it becomes at corpus
+    scale."""
+    registry.QUERIES[name](spark, SF_DIR)
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        return executed_plan(registry.QUERIES[name](spark, SF_DIR))
+    finally:
+        for k, v in saved.items():
+            if v is not None:
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
+
+
 def test_lsh_band_exchanges_carry_no_payload(spark):
     """Round-3 invariant: the banding fan-out in the LSH joins must
     shuffle only (band key, id) rows — embeddings and shingle sets
@@ -241,31 +269,7 @@ def test_lsh_band_exchanges_carry_no_payload(spark):
         ("l04_simjoin_lsh", ("emb", "embedding")),
         ("l02_minhash_neardup", ("_sh", "sh#")),
     ]:
-        # Build once under normal conf (configure() re-applies the
-        # session broadcast threshold at build time), THEN disable
-        # broadcast joins for the execution: at sf0.001 AQE otherwise
-        # broadcasts every join, leaving zero gated exchanges and a
-        # vacuous invariant (ADVICE r10). With broadcasts off, the
-        # band join materializes as the same shuffle it becomes at
-        # corpus scale, and the payload check actually bites in CI.
-        registry.QUERIES[name](spark, SF_DIR)
-        saved = {
-            k: spark.conf.get(k, None)
-            for k in (
-                "spark.sql.autoBroadcastJoinThreshold",
-                "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            )
-        }
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-            plan = executed_plan(registry.QUERIES[name](spark, SF_DIR))
-        finally:
-            for k, v in saved.items():
-                if v is not None:
-                    spark.conf.set(k, v)
-                else:
-                    spark.conf.unset(k)
+        plan = _executed_without_broadcast(spark, name)
         exchanges = [
             line
             for line in plan.splitlines()
@@ -280,6 +284,47 @@ def test_lsh_band_exchanges_carry_no_payload(spark):
             assert not any(m in line for m in payload_markers), (
                 f"{name}: payload column crosses a shuffle: {line.strip()[:160]}"
             )
+
+
+@pytest.mark.parametrize("broadcast", [False, True], ids=["shuffled", "default"])
+@pytest.mark.parametrize(
+    "name, checked",
+    [
+        ("l02_minhash_neardup", "n_verified"),
+        ("l02_simhash_neardup", "n_near"),
+        ("l04_simjoin_lsh", "n_verified"),
+    ],
+)
+def test_dedup_kernels_run_once(spark, name, checked, broadcast):
+    """The band self-join's two sides share ONE exchange: it sits
+    below the a_id/b_id aliases, so the second side is a
+    ReusedExchange (under a BroadcastExchange when the planner
+    broadcasts it) and the signature subtree below it (md5 hash
+    families, hyperplane dots) runs once per execution. Before, each
+    side — and each extra consumer of the candidates — planned its
+    own subtree: the band explode appeared up to three times, and
+    MinHash hid the repeat behind an eager localCheckpoint. The
+    candidate count and its verified count must come out of one
+    aggregate: two crossJoined counts re-ran the pair subtree."""
+    if broadcast:
+        plan = executed_plan(registry.QUERIES[name](spark, SF_DIR))
+    else:
+        plan = _executed_without_broadcast(spark, name)
+    lines = plan.splitlines()
+    band = [ln for ln in lines if "Exchange hashpartitioning(band_id" in ln]
+    made = [ln for ln in band if "ReusedExchange" not in ln]
+    assert len(made) == 1, f"{name}: band-key exchange not materialized once:\n{plan}"
+    assert len(band) - len(made) == 1, f"{name}: second band side not reused:\n{plan}"
+    explodes = [
+        ln for ln in lines if re.search(r"Generate explode\(array\((named_)?struct\(band_id", ln)
+    ]
+    assert len(explodes) == 1, f"{name}: band keys computed {len(explodes)}x:\n{plan}"
+    one_agg = re.compile(
+        r"HashAggregate\(keys=\[\], .*output=\[[^\]]*n_candidates#\d+L, " + checked + "#"
+    )
+    assert any(one_agg.search(ln) for ln in lines), (
+        f"{name}: n_candidates and {checked} not from one aggregate:\n{plan}"
+    )
 
 
 def test_sorted_layout_enables_pruning(spark):

@@ -252,7 +252,7 @@ def _j14_sweep(spark):
     (#ends strictly before my start) and the per-day pair count is
     the sum of contributions — one window over 2N endpoint rows
     instead of a pair join that is quadratic in users-per-day (every
-    user shares the same ~90 day blocks, so the blocked join's
+    user shares the same 30 day blocks, so the blocked join's
     per-key pair space is (users/day)^2 at any scale). Tie rules:
     ends sort AFTER starts at the same timestamp (a.t1 == b.t0 is
     still an overlap), and equal t0s order by user so each pair is
@@ -292,6 +292,7 @@ def _j14_sweep(spark):
         contrib.filter(F.col("is_end") == 0)
         .groupBy("day")
         .agg(F.sum("active_before").alias("n_overlapping_pairs"))
+        .where(F.col("n_overlapping_pairs") > 0)
     )
 
 

@@ -145,14 +145,14 @@ def cc_row(spark, sf_dir: str):
     l11/l16 loop)."""
     from hetnetdb_spark.pipeline.dedup import (
         JACCARD_THRESHOLD,
-        _SHINGLE_SPARK,
         _banded_signatures,
         _min_label_components,
+        shingles,
     )
     from hetnetdb_spark.pipeline.similarity import band_candidates
 
     docs_full = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs_full.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh"))
+    docs = shingles(docs_full, "doc_id")
     banded = _banded_signatures(docs)
     cand = band_candidates(banded, id_col="doc_id", key="bucket")
     sh_a = docs.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
